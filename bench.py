@@ -78,6 +78,19 @@ def _count_turns(spark, sf_dir: str) -> int:
     )
 
 
+def _load_ref(ref_path: str) -> dict:
+    """The reference of ``--compare``: a recorded BENCH_r*.json, bare or
+    wrapped under ``parsed``. Exits non-zero when it carries no per-query
+    timings, so a bad reference fails loudly."""
+    with open(ref_path) as f:
+        ref = json.load(f)
+    if "queries" not in ref and isinstance(ref.get("parsed"), dict):
+        ref = ref["parsed"]
+    if not isinstance(ref.get("queries"), dict):
+        sys.exit(f"--compare {ref_path}: no 'queries' dict in the reference")
+    return ref
+
+
 def _compare(per_query: dict[str, float], ref_path: str) -> dict:
     """Mechanical regression call against a recorded BENCH_r*.json.
 
@@ -93,12 +106,12 @@ def _compare(per_query: dict[str, float], ref_path: str) -> dict:
     names the queries that moved on their own."""
     import statistics
 
-    with open(ref_path) as f:
-        ref = json.load(f)
-    if "queries" not in ref and isinstance(ref.get("parsed"), dict):
-        ref = ref["parsed"]  # the driver's BENCH_r*.json wraps our line
-    ref_q = ref.get("queries", {})
+    ref = _load_ref(ref_path)
+    ref_q = ref["queries"]
     common = sorted(set(per_query) & set(ref_q))
+    if not common:
+        # no shared query: a verdict would be 'noise-band' by default
+        sys.exit(f"--compare {ref_path}: no query in common with the ref")
     # a recorded 0.0 (sub-millisecond query rounded away) cannot form a
     # ratio but must not be silently exempt from regression detection
     ratios = {q: round(per_query[q] / ref_q[q], 3) for q in common if ref_q[q]}
@@ -131,8 +144,7 @@ def run_headline(compare_path: str | None = None) -> None:
     # validate the compare target BEFORE the 20-70 s suite runs: a typo'd
     # path failing after the benchmark would throw the whole run away
     if compare_path is not None:
-        with open(compare_path) as f:
-            json.load(f)
+        _load_ref(compare_path)
     from fast_duplicate_finder_spark.queries import QUERIES
     from fast_duplicate_finder_spark.session import get_spark
 

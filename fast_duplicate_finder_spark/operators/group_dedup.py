@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from fast_duplicate_finder_spark.config import PipelineConfig
 from fast_duplicate_finder_spark.operators.exact_cascade import having_at_least
+from fast_duplicate_finder_spark.session import empty_frame
 
 
 def _segs(col, sep: str = "/"):
@@ -97,9 +98,7 @@ def folder_signatures(conv_hashes: DataFrame, cfg: PipelineConfig) -> DataFrame:
         F.max(_depth(F.col("folder"), sep))
     ).collect()[0][0]
     if max_depth_row is None:
-        return conv_hashes.sparkSession.createDataFrame(
-            [], "folder string, sig long"
-        )
+        return empty_frame(conv_hashes.sparkSession, "folder string, sig long")
 
     all_sigs: DataFrame | None = None
     child_items: DataFrame | None = None  # (folder, item) from level d+1

@@ -52,6 +52,7 @@ from fast_duplicate_finder_spark.operators.connected_components import (
     connected_components,
 )
 from fast_duplicate_finder_spark.plans import report as report_mod
+from fast_duplicate_finder_spark.session import empty_frame
 from fast_duplicate_finder_spark.sources.transcripts import (
     assemble_conversations,
     conv_stats,
@@ -192,8 +193,9 @@ def run_pipeline(
             ["p3_exact", "p4_group_sigs"],
         )
     else:
-        top = spark.createDataFrame(
-            [], "folder string, sig long, cluster_id string, cluster_size long"
+        top = empty_frame(
+            spark,
+            "folder string, sig long, cluster_id string, cluster_size long",
         )
         files_kept = p3
 
@@ -319,10 +321,10 @@ def run_pipeline(
             ["p7_pairs"],
         )
     else:
-        pairs = spark.createDataFrame(
-            [], "conv_id_a string, conv_id_b string, kind string"
+        pairs = empty_frame(
+            spark, "conv_id_a string, conv_id_b string, kind string"
         )
-        clusters = spark.createDataFrame([], "conv_id string, component string")
+        clusters = empty_frame(spark, "conv_id string, component string")
 
     summary_df = run_phase(
         "report_summary",

@@ -10,7 +10,9 @@ from __future__ import annotations
 import os
 import pathlib
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 # Repo root (parent of the package dir) — executors' Python workers must be
 # able to import this package to deserialize pandas-UDF closures. On a real
@@ -94,3 +96,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """Zero-row DataFrame of DDL ``schema`` (all columns nullable) that runs no
+    tasks: the optimizer folds ``limit(0)`` into an empty LocalRelation.
+    ``spark.createDataFrame([], schema)`` plans a Python-RDD scan instead,
+    one Python-worker task per core."""
+    fields = DataType.fromDDL(schema)
+    return (
+        spark.range(1)
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
+        .limit(0)
+    )

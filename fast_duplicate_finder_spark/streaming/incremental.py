@@ -66,6 +66,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fast_duplicate_finder_spark.session import empty_frame
 from fast_duplicate_finder_spark.sources.transcripts import (
     assemble_conversations,
 )
@@ -312,7 +313,7 @@ def read_dup_log(spark: SparkSession, work_dir: str) -> DataFrame:
     _require_local_fs(work_dir)
     path = os.path.join(work_dir, "dups", "data")
     if not _has_parts(path):
-        return spark.createDataFrame([], DUP_LOG_SCHEMA)
+        return empty_frame(spark, DUP_LOG_SCHEMA)
     return spark.read.parquet(path)
 
 
@@ -538,7 +539,7 @@ def read_near_pair_log(spark: SparkSession, work_dir: str) -> DataFrame:
     _require_local_fs(work_dir)
     path = os.path.join(work_dir, "near_pairs", "data")
     if not _has_parts(path):
-        return spark.createDataFrame([], NEAR_PAIR_SCHEMA)
+        return empty_frame(spark, NEAR_PAIR_SCHEMA)
     return spark.read.schema(NEAR_PAIR_SCHEMA).parquet(path).withColumn(
         "is_overflow",
         F.coalesce(F.col("is_overflow"), F.col("conv_id_a") == "_overflow"),
@@ -793,7 +794,7 @@ def read_lsh_pair_log(spark: SparkSession, work_dir: str) -> DataFrame:
     _require_local_fs(work_dir)
     path = os.path.join(work_dir, "lsh_pairs", "data")
     if not _has_parts(path):
-        return spark.createDataFrame([], LSH_PAIR_SCHEMA)
+        return empty_frame(spark, LSH_PAIR_SCHEMA)
     return spark.read.schema(LSH_PAIR_SCHEMA).parquet(path).withColumn(
         "is_overflow",
         F.coalesce(F.col("is_overflow"), F.col("conv_id_a") == "_overflow"),
@@ -1111,7 +1112,7 @@ def read_cluster_labels(spark: SparkSession, work_dir: str) -> DataFrame:
     _require_local_fs(work_dir)
     base_data = os.path.join(work_dir, "base", "data")
     if not _has_parts(base_data):
-        return spark.createDataFrame([], CLUSTER_LABEL_SCHEMA)
+        return empty_frame(spark, CLUSTER_LABEL_SCHEMA)
     labels = spark.read.parquet(base_data).select("conv_id", "label")
     m = _compressed_merge_map(
         spark, os.path.join(work_dir, "merges", "data")

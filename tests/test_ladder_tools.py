@@ -14,11 +14,13 @@ import pathlib
 import subprocess
 import sys
 
+import pytest
+
 _SCRIPTS = pathlib.Path(__file__).resolve().parent.parent / "scripts"
 
 
-def _load(name: str):
-    spec = importlib.util.spec_from_file_location(name, _SCRIPTS / f"{name}.py")
+def _load(name: str, base: pathlib.Path = _SCRIPTS):
+    spec = importlib.util.spec_from_file_location(name, base / f"{name}.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -115,11 +117,7 @@ def test_bench_compare_noise_vs_regression(tmp_path):
     window) is 'noise-band' no matter how large; a single query moving on
     its own is flagged by name; sub-second wobble below the absolute
     floor is never flagged."""
-    spec = importlib.util.spec_from_file_location(
-        "bench", pathlib.Path(__file__).resolve().parent.parent / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    bench = _load("bench", _SCRIPTS.parent)
 
     ref = {
         "value": 20.0,
@@ -152,3 +150,22 @@ def test_bench_compare_noise_vs_regression(tmp_path):
            "q_more": 1.5, "q_small": 0.3}
     c = bench._compare(cur, str(ref_path))
     assert c["only_in_current"] == ["q_new"]
+
+
+@pytest.mark.parametrize(
+    "ref",
+    [
+        {"value": 20.0},  # no queries dict at all
+        {"parsed": {"value": 20.0, "queries": None}},  # wrapped, not a dict
+        {"value": 20.0, "queries": {"q_gone": 1.0}},  # nothing in common
+    ],
+)
+def test_bench_compare_fails_fast_on_bad_reference(tmp_path, ref):
+    """A reference without per-query timings, or with no query in common,
+    exits non-zero instead of returning a default 'noise-band' verdict."""
+    bench = _load("bench", _SCRIPTS.parent)
+    ref_path = tmp_path / "ref.json"
+    ref_path.write_text(json.dumps(ref))
+    with pytest.raises(SystemExit) as exc:
+        bench._compare({"q_big": 6.0}, str(ref_path))
+    assert exc.value.code not in (0, None)

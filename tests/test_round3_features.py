@@ -109,6 +109,59 @@ def test_manifest_counters_from_footers(spark, tmp_path):
     assert len(m["partitions"]) >= 1
 
 
+def test_checkpoint_is_one_write_as_produced(spark, tmp_path):
+    """A small single-partition result is written once, as produced: one
+    parquet file and no rebalance rewrite beside it (compute-heavy
+    consumers pin their own exchange width instead)."""
+    store = CheckpointStore(spark, str(tmp_path / "ck"), "fp")
+    out = store.write(spark.range(10).coalesce(1), "p0")
+    phase_dir = tmp_path / "ck" / "p0"
+    assert len(list((phase_dir / "data").glob("*.parquet"))) == 1
+    assert not (phase_dir / "data.rebal").exists()
+    assert store.manifest("p0")["rows"] == 10 == out.count()
+
+
+def test_placeholder_tables_run_no_python(spark, tmp_path, monkeypatch):
+    """With groups and near-dup off, the top/pairs/clusters placeholders
+    keep their schemas and zero rows, and neither they nor the summary
+    plan built over them scan a Python RDD (a createDataFrame([]) scan
+    costs defaultParallelism Python-worker tasks)."""
+    from pyspark.sql.types import DataType
+
+    from fast_duplicate_finder_spark.plans import report as report_mod
+
+    plans: list[str] = []
+    orig = report_mod.summarize
+
+    def capturing(*args):
+        out = orig(*args)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(report_mod, "summarize", capturing)
+    df = generate_transcripts(spark, n_convs=40, seed=7)
+    rep = run_pipeline(
+        spark, df, CFG, str(tmp_path / "c"), with_groups=False,
+        with_near_dup=False,
+    )
+    expect = {
+        "top_folders": "folder string, sig long, cluster_id string, "
+        "cluster_size long",
+        "near_pairs": "conv_id_a string, conv_id_b string, kind string",
+        "near_clusters": "conv_id string, component string",
+    }
+    for name, ddl in expect.items():
+        frame = getattr(rep, name)
+        assert frame.schema == DataType.fromDDL(ddl)
+        assert frame.count() == 0
+        plans.append(frame._jdf.queryExecution().executedPlan().toString())
+    assert len(plans) == 4
+    for plan in plans:
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    assert rep.summary["folder_sets"] == 0
+    assert rep.summary["near_dup_clusters"] == 0
+
+
 # --- format boundary carrying ----------------------------------------------
 
 @pytest.mark.parametrize(

@@ -213,7 +213,9 @@ def test_shuffle_partitions_not_a_pipeline_parameter():
         PipelineConfig(shuffle_partitions=64)
 
 
-def test_compute_heavy_exchanges_pin_explicit_width(spark, monkeypatch):
+def test_compute_heavy_exchanges_pin_explicit_width(
+    spark, monkeypatch, tmp_path
+):
     """AQE merge-skew guard (PLANS.md): the conv_id exchange feeding the
     feature stage and the key exchange inside capped_pairs use an EXPLICIT
     partition count — AQE's byte-targeted coalescing merged their even hash
@@ -237,6 +239,14 @@ def test_compute_heavy_exchanges_pin_explicit_width(spark, monkeypatch):
     )
     feats = shingle_features(docs, cfg)
     assert "REPARTITION_BY_NUM" in feats._jdf.queryExecution().toString()
+    assert feats.rdd.getNumPartitions() == n_shuffle
+
+    # a 1-file checkpoint (written as produced, no rebalance pass) still
+    # feeds the kernel stage at the pinned width
+    one_file = str(tmp_path / "docs")
+    docs.coalesce(1).write.parquet(one_file)
+    assert len(list((tmp_path / "docs").glob("*.parquet"))) == 1
+    feats = shingle_features(spark.read.parquet(one_file), cfg)
     assert feats.rdd.getNumPartitions() == n_shuffle
 
     rows = spark.createDataFrame(
