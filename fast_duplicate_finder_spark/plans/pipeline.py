@@ -140,7 +140,7 @@ def run_pipeline(
             raise
         progress.phase_done(
             phase, counter["i"], n_phases,
-            store.metrics[-1] if store.metrics else {},
+            next(m for m in reversed(store.metrics) if m["phase"] == phase),
         )
         return out
 
@@ -231,65 +231,31 @@ def run_pipeline(
         # resume (kill mid-leg loses only that leg), and the fused
         # union-of-three-legs query measured ~2.5x slower than the legs run
         # as separate jobs at high core counts (three Arrow-UDF stage trees
-        # competing inside one DAG). Overflow tables are phases too — the
-        # manifest row count IS the counter (capped, counted, never silent).
-        # A leg's pairs + overflow are written in ONE pass: a resume that
-        # finds either table missing recomputes the leg once, not twice.
-        def _leg_with_overflow(pairs_phase, ovf_phase, fn):
-            cancel.check()
-            counter["i"] += 1
-            cancel.enter_phase(pairs_phase)
-            progress.phase_start(pairs_phase, counter["i"], n_phases)
-            if (
-                resume
-                and store.exists(pairs_phase)
-                and store.exists(ovf_phase)
-            ):
-                leg_metric = {"phase": pairs_phase, "resumed": True}
-                store.metrics.append(leg_metric)
-                out = store.read(pairs_phase)
-            else:
-                import time as _time
-
-                t0 = _time.perf_counter()
-                # the poller wraps fn() too: a leg's dominant work is the
-                # eager candidate-generation checkpoint INSIDE fn(), and
-                # within-phase progress must cover it, not only the final
-                # verify+write
-                with StageProgressPoller(
-                    spark, progress, pairs_phase, counter["i"], n_phases,
-                    interval=progress.poll_interval,
-                ):
-                    leg_pairs, leg_ovf = fn()
-                    out = store.write(
-                        leg_pairs, pairs_phase, lineage=["p6_features"]
-                    )
-                    leg_metric = store.metrics[-1]  # the pairs-table metric
-                    store.write(leg_ovf, ovf_phase, lineage=["p6_features"])
-                leg_metric["seconds"] = round(_time.perf_counter() - t0, 2)
-            progress.phase_done(
-                pairs_phase, counter["i"], n_phases, leg_metric
-            )
-            return out
-
-        mh_pairs_df = _leg_with_overflow(
+        # competing inside one DAG). Overflow tables are side tables of
+        # their leg's phase — the manifest row count IS the counter
+        # (capped, counted, never silent) — written in the same pass: a
+        # resume that finds either table missing recomputes the leg once.
+        mh_pairs_df = run_phase(
             "p7a_minhash_pairs",
-            "p7a_lsh_overflow",
             lambda: (
                 lambda mh, ovf: (
                     mh.select("conv_id_a", "conv_id_b", "jaccard"), ovf
                 )
             )(*minhash_pairs(features, cfg)),
+            ["p6_features"],
+            side_phase="p7a_lsh_overflow",
         )
-        sh_pairs_df = _leg_with_overflow(
+        sh_pairs_df = run_phase(
             "p7b_simhash_pairs",
-            "p7b_simhash_overflow",
             lambda: simhash_pairs(features, cfg),
+            ["p6_features"],
+            side_phase="p7b_simhash_overflow",
         )
-        sp_pairs_df = _leg_with_overflow(
+        sp_pairs_df = run_phase(
             "p7c_span_pairs",
-            "p7c_span_overflow",
             lambda: span_pairs(features, cfg),
+            ["p6_features"],
+            side_phase="p7c_span_overflow",
         )
 
         pairs = run_phase(

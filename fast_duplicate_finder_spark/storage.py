@@ -310,14 +310,30 @@ class CheckpointStore:
         compute,
         lineage: list[str] | None = None,
         resume: bool = True,
+        side_phase: str | None = None,
         **write_kwargs,
     ) -> DataFrame:
         """Skip phases whose checkpoint exists under the same config
-        fingerprint — the resume contract (BASELINE.md resumability row)."""
-        if resume and self.exists(phase):
+        fingerprint — the resume contract (BASELINE.md resumability row).
+
+        ``side_phase`` names a side table (a near-dup leg's overflow
+        counts) that ``compute()`` returns next to the phase's table as a
+        ``(table, side)`` pair. The phase resumes only when BOTH manifests
+        exist; otherwise it computes once and writes both, the phase's
+        table first, and that table's metric ``seconds`` covers both
+        writes."""
+        if (
+            resume
+            and self.exists(phase)
+            and (side_phase is None or self.exists(side_phase))
+        ):
             self.metrics.append({"phase": phase, "resumed": True})
             return self.read(phase)
         t0 = time.perf_counter()
-        out = self.write(compute(), phase, lineage=lineage, **write_kwargs)
-        self.metrics[-1]["seconds"] = round(time.perf_counter() - t0, 2)
+        table, side = compute() if side_phase else (compute(), None)
+        out = self.write(table, phase, lineage=lineage, **write_kwargs)
+        metric = self.metrics[-1]
+        if side_phase:
+            self.write(side, side_phase, lineage=lineage)
+        metric["seconds"] = round(time.perf_counter() - t0, 2)
         return out

@@ -6,7 +6,7 @@ corpus, however, *arrives* incrementally; these operators make the exact
 cascade incremental without reprocessing history:
 
 * ``run_incremental_dedup`` — micro-batch ingest of transcript rows
-  (``readStream`` over a parquet directory; Iceberg/Kafka sources swap in
+  (a file stream over a parquet directory; Iceberg/Kafka sources swap in
   behind the same call). Each micro-batch assembles its conversations
   (window-ordered concat — the batch operator, reused verbatim), full-hashes
   them, and joins against the persistent *seen-hash* state table: hashes
@@ -14,7 +14,7 @@ cascade incremental without reprocessing history:
   State is a parquet table partitioned by (epoch_id, hash prefix):
   - the per-batch state read is PRUNED to the micro-batch's own hash
     prefixes (partition filter, no full-state scan per micro-batch);
-  - a replayed epoch (at-least-once foreachBatch restart) dynamic-overwrites
+  - a replayed epoch (at-least-once micro-batch restart) dynamic-overwrites
     exactly its own epoch partitions — state and dup log are both
     idempotent with NO per-batch epoch-probe job; the join simply excludes
     the current epoch's own partitions;
@@ -53,15 +53,17 @@ cascade incremental without reprocessing history:
   closes them) — tests pin batch output; streaming is exercised with an
   ``availableNow`` trigger.
 
-Exactly-once notes: foreachBatch gives at-least-once; the epoch id is
-recorded in the state table so a replayed micro-batch can be detected and
-its rows dropped (idempotent resume — same contract as the phase
-checkpoints in storage.py).
+Exactly-once notes: the micro-batch sink gives at-least-once; the epoch
+id is recorded in the state table so a replayed micro-batch can be
+detected and its rows dropped (idempotent resume — same contract as the
+phase checkpoints in storage.py).
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -85,7 +87,16 @@ def stream_transcripts(
     over writer-produced subdirectories (``.../in/*``) — a plain directory
     whose parquet files sit one level down (each ``df.write.parquet`` makes
     a subdirectory) streams ZERO rows, silently."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
+    return _file_stream(spark, TRANSCRIPT_SCHEMA, path, max_files_per_trigger)
+
+
+def _file_stream(
+    spark: SparkSession,
+    schema: str,
+    path: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(path)
@@ -93,18 +104,17 @@ def stream_transcripts(
 
 N_STATE_PREFIXES = 64  # hash-prefix partitions of the state table
 
-LEGACY_EPOCH = -1  # reserved epoch for state migrated from the old layout
-
 
 def _require_local_fs(work_dir: str) -> None:
     """Fail fast on a URI-shaped ``work_dir`` (hdfs://, s3a://, ...): the
     state lifecycle here mixes Spark writes (which would work on any
     Hadoop filesystem) with driver-local ``os.walk`` / ``os.replace`` /
-    ``shutil`` manipulation (``_has_parts``, the migration and compaction
-    rename dances) that would silently no-op or mis-detect state on a
-    remote URI. At cluster scale the state tables become Iceberg MERGE
-    targets (storage.py's table_format seam) rather than this local
-    parquet layout."""
+    ``shutil`` manipulation (``_has_parts``, the compaction rename dance in
+    ``_crash_safe_swap``, the checkpoint listing in ``_require_quiesced``)
+    that would silently no-op or mis-detect state on a remote URI. At
+    cluster scale the state tables become Iceberg MERGE targets
+    (storage.py's table_format seam) rather than this local parquet
+    layout."""
     if "://" in work_dir:
         raise ValueError(
             "streaming state work_dir must be a local filesystem path "
@@ -118,8 +128,8 @@ def _has_parts(path: str) -> bool:
     existence of the DIRECTORY is not enough: a batch whose write produced
     zero rows leaves _SUCCESS (and, for partitioned writes, nothing else),
     and ``spark.read.parquet`` then fails schema inference forever — the
-    same hazard the dup-log readers guard against (read_dup_log), applied
-    to every state table.
+    same hazard the log readers guard against (_read_log), applied to
+    every state table.
 
     Hidden entries (``_temporary``, ``.spark-staging-*``, dot-files) are
     pruned exactly as Spark's own reader prunes them: a batch killed MID
@@ -136,62 +146,129 @@ def _has_parts(path: str) -> bool:
     return False
 
 
-def _migrate_legacy_state(spark: SparkSession, state_data: str) -> None:
-    """One-time upgrade of a pre-(epoch_id, hp) state table.
+# ---------------------------------------------------------------------------
+# The shared leg skeleton: on-disk layout, runner, epoch-state I/O
+# ---------------------------------------------------------------------------
 
-    The old layout was a plain unpartitioned append of
-    (fhash, conv_id, size); the per-batch reader requires the ``hp``
-    partition column and would raise UNRESOLVED_COLUMN forever on an
-    upgraded stream (losing the seen-hash history if the operator's only
-    recourse is deleting the dir). Rewrite once into the partitioned
-    layout under reserved epoch -1 — which every batch reads (it only
-    excludes its OWN epoch).
 
-    CRASH-SAFE ordering (a migration that can lose the whole seen-hash
-    state silently re-registers every known hash as a first): the old
-    state is renamed ASIDE (atomic), the completed rewrite renamed INTO
-    PLACE (atomic), and only then is the old copy deleted. Every crash
-    window leaves either the old state in place, or a completed rewrite
-    plus recoverable leftovers — handled on the next call:
+@dataclass(frozen=True)
+class _Layout:
+    """One leg's dirs under its ``work_dir``. ``state`` and ``out`` are
+    handed to the leg's batch function in that order; ``folds`` lists the
+    epoch-partitioned state tables compaction folds, as (path under
+    ``state``, prefix column). The names are the restart contract: a
+    renamed checkpoint dir silently reprocesses the whole stream."""
 
-    * crash before the aside-rename: old state intact, stale ``.migrate``
-      is rebuilt from scratch;
-    * crash between the two renames: ``state_data`` absent + a COMPLETE
-      (_SUCCESS-marked) ``.migrate`` present — finish the swap;
-    * crash before the final delete: migrated state in place, orphan
-      ``.old`` is removed."""
-    import shutil
+    checkpoint: str
+    state: str
+    out: str
+    folds: tuple[tuple[str, str], ...] = ()
 
-    tmp = state_data + ".migrate"
-    old = state_data + ".old"
-    if not os.path.exists(state_data):
-        # crashed between the renames iff the rewrite had completed
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.replace(tmp, state_data)
-            shutil.rmtree(old, ignore_errors=True)
-        return
-    if not _has_parts(state_data):  # empty marker dir: nothing to migrate
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        return
-    legacy = spark.read.parquet(state_data)
-    if "hp" in legacy.columns:
-        shutil.rmtree(tmp, ignore_errors=True)  # stale/aborted rewrite
-        shutil.rmtree(old, ignore_errors=True)  # crash before final delete
-        return
-    migrated = legacy.withColumn(
-        "hp", F.pmod(F.col("fhash"), F.lit(N_STATE_PREFIXES)).cast("int")
+
+_DEDUP = _Layout("_stream_checkpoint", "state", "dups", (("data", "hp"),))
+_SIMHASH = _Layout(
+    "_simhash_stream_checkpoint", "sim_state", "near_pairs", (("data", "cp"),)
+)
+_LSH = _Layout(
+    "_lsh_stream_checkpoint",
+    "lsh_state",
+    "lsh_pairs",
+    (
+        (os.path.join("bands", "data"), "bp"),
+        (os.path.join("feats", "data"), "hp"),
+    ),
+)
+_CLUSTERS = _Layout("_stream_checkpoint", "base", "merges")
+
+
+def _start_leg(
+    spark: SparkSession,
+    layout: _Layout,
+    schema: str,
+    input_path: str,
+    work_dir: str,
+    batch_fn,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+):
+    """The one runner behind every ``run_incremental_*``: stream
+    ``input_path`` into ``batch_fn(df, epoch_id, state_dir, out_dir)``
+    under the leg's checkpoint and return the StreamingQuery."""
+    _require_local_fs(work_dir)
+    dirs = [os.path.join(work_dir, d) for d in (layout.state, layout.out)]
+    for d in dirs:
+        os.makedirs(d, exist_ok=True)
+    ckpt = os.path.join(work_dir, layout.checkpoint)
+    writer = (
+        _file_stream(spark, schema, input_path, max_files_per_trigger)
+        .writeStream.foreachBatch(lambda df, eid: batch_fn(df, eid, *dirs))
+        .option("checkpointLocation", ckpt)
     )
-    if "epoch_id" not in migrated.columns:
-        migrated = migrated.withColumn("epoch_id", F.lit(LEGACY_EPOCH))
-    shutil.rmtree(tmp, ignore_errors=True)
-    migrated.write.mode("overwrite").partitionBy("epoch_id", "hp").parquet(
-        tmp
-    )  # _SUCCESS marks completion
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(state_data, old)
-    os.replace(tmp, state_data)
-    shutil.rmtree(old)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _read_log(
+    spark: SparkSession, work_dir: str, sub: str, schema: str
+) -> DataFrame:
+    """A leg's epoch-partitioned output table, read with its declared
+    schema (``epoch_id`` too, so an empty and a non-empty log have the
+    same types). A stream that wrote no rows leaves only _SUCCESS markers
+    (no part files, so no inferable schema) and before the first batch the
+    dir does not exist — both mean an EMPTY log, not an error."""
+    _require_local_fs(work_dir)
+    path = os.path.join(work_dir, sub, "data")
+    if not _has_parts(path):
+        return empty_frame(spark, schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _prefix(col):
+    """The state partition of a 64-bit hash column."""
+    return F.pmod(col, F.lit(N_STATE_PREFIXES)).cast("int")
+
+
+def _prior_state(
+    spark: SparkSession, path: str, epoch_id: int, prefix_col: str, prefixes
+) -> DataFrame:
+    """A state table pruned to ``prefixes`` (partition filter, no
+    full-state scan per micro-batch) and to epochs other than
+    ``epoch_id``: a replayed epoch must not see its own crashed
+    half-write."""
+    return (
+        spark.read.parquet(path)
+        .filter(F.col("epoch_id") != F.lit(epoch_id))
+        .filter(F.col(prefix_col).isin(sorted(prefixes)))
+    )
+
+
+def _write_epoch(
+    df: DataFrame, path: str, epoch_id: int, *prefix_cols: str
+) -> None:
+    """Epoch-partitioned dynamic-overwrite write: makes every state table
+    and log idempotent under at-least-once replay — a re-run epoch
+    (including a crash between a leg's writes) overwrites exactly its own
+    epoch partitions instead of appending a second copy."""
+    df.withColumn("epoch_id", F.lit(epoch_id)).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("epoch_id", *prefix_cols).parquet(path)
+
+
+def _overflow_markers(
+    rows: DataFrame, key: str, label: str, count, value_col: str
+) -> DataFrame:
+    """Pair-log counter rows for capped buckets: one per ``key`` value,
+    holding ``count`` in the log's score column ``value_col``. They carry
+    an explicit ``is_overflow`` flag so log consumers never mistake a
+    counter row for a pair, and keep the ``'_overflow'`` id convention for
+    grep-ability (capped, counted, never silent)."""
+    return rows.groupBy(key).agg(count.alias(value_col)).select(
+        F.lit("_overflow").alias("conv_id_a"),
+        F.concat(F.lit(label), F.col(key)).alias("conv_id_b"),
+        value_col,
+        F.lit(True).alias("is_overflow"),
+    )
 
 
 def _dedup_batch(
@@ -216,23 +293,14 @@ def _dedup_batch(
         "conv_id",
         F.xxhash64("doc").alias("fhash"),
         "size",
-    ).withColumn(
-        "hp", F.pmod(F.col("fhash"), F.lit(N_STATE_PREFIXES)).cast("int")
-    ).observe(
+    ).withColumn("hp", _prefix(F.col("fhash"))).observe(
         obs, F.collect_set("hp").alias("hps")
     ).localCheckpoint(eager=True)  # reused by prefix scan + two joins
     state_data = os.path.join(state_dir, "data")
     have_state = _has_parts(state_data)
     if have_state:
-        # prune the state read to the prefixes this batch actually touches
-        # (partition filter on hp) and to epochs other than our own (a
-        # replayed epoch must not see its own crashed half-write)
-        prefixes = sorted(obs.get["hps"])
-        seen = (
-            spark.read.parquet(state_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("hp").isin(prefixes))
-        )
+        # the state read touches only this batch's own hash prefixes
+        seen = _prior_state(spark, state_data, epoch_id, "hp", obs.get["hps"])
         dup_hits = hashed.join(
             seen.select("fhash", F.col("conv_id").alias("first_conv_id")),
             "fhash",
@@ -249,23 +317,15 @@ def _dedup_batch(
     dups = (
         dup_hits.unionByName(intra_dups) if dup_hits is not None else intra_dups
     )
-    # Epoch-partitioned dynamic-overwrite writes make BOTH tables idempotent
-    # under at-least-once replay: a re-run epoch (including a crash between
-    # the dup-log and state writes) overwrites exactly its own epoch
-    # partitions instead of appending a second copy.
-    dups.select("conv_id", "fhash", "size", "first_conv_id").withColumn(
-        "epoch_id", F.lit(epoch_id)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("epoch_id").parquet(os.path.join(dups_dir, "data"))
+    _write_epoch(
+        dups.select("conv_id", "fhash", "size", "first_conv_id"),
+        os.path.join(dups_dir, "data"),
+        epoch_id,
+    )
     firsts = tagged.filter(F.col("conv_id") == F.col("first_conv_id")).select(
         "fhash", "conv_id", "size", "hp"
     )
-    firsts.withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "epoch_id", "hp"
-    ).parquet(state_data)
+    _write_epoch(firsts, state_data, epoch_id, "hp")
 
 
 def run_incremental_dedup(
@@ -277,26 +337,10 @@ def run_incremental_dedup(
 ):
     """Start (and with ``available_now`` run to completion) the incremental
     dedup stream. Returns the StreamingQuery."""
-    _require_local_fs(work_dir)
-    state_dir = os.path.join(work_dir, "state")
-    dups_dir = os.path.join(work_dir, "dups")
-    ckpt = os.path.join(work_dir, "_stream_checkpoint")
-    os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(dups_dir, exist_ok=True)
-    state_data = os.path.join(state_dir, "data")
-    # unconditional: also recovers a crash between the migration renames
-    # (state_data absent, completed '.migrate' present)
-    _migrate_legacy_state(spark, state_data)
-    stream = stream_transcripts(spark, input_path, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, eid: _dedup_batch(df, eid, state_dir, dups_dir)
-        )
-        .option("checkpointLocation", ckpt)
+    return _start_leg(
+        spark, _DEDUP, TRANSCRIPT_SCHEMA, input_path, work_dir, _dedup_batch,
+        available_now, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 DUP_LOG_SCHEMA = (
@@ -307,14 +351,9 @@ DUP_LOG_SCHEMA = (
 
 def read_dup_log(spark: SparkSession, work_dir: str) -> DataFrame:
     """(conv_id, fhash, size, first_conv_id, epoch_id) of every duplicate
-    seen. A duplicate-free stream writes only _SUCCESS markers (no part
-    files, so no inferable schema) and before the first batch the dir
-    does not exist — both mean an EMPTY log, not an error."""
-    _require_local_fs(work_dir)
-    path = os.path.join(work_dir, "dups", "data")
-    if not _has_parts(path):
-        return empty_frame(spark, DUP_LOG_SCHEMA)
-    return spark.read.parquet(path)
+    seen; a duplicate-free or not-yet-started stream reads as an EMPTY log
+    (see _read_log)."""
+    return _read_log(spark, work_dir, _DEDUP.out, DUP_LOG_SCHEMA)
 
 
 def sessionize(
@@ -396,9 +435,7 @@ def _simhash_batch_fn(
         F.posexplode(simhash_chunks(F.col("simhash"), n_chunks)).alias(
             "chunk_id", "chunk_val"
         ),
-    ).withColumn(
-        "cp", F.pmod(F.col("chunk_val"), F.lit(N_STATE_PREFIXES)).cast("int")
-    )
+    ).withColumn("cp", _prefix(F.col("chunk_val")))
     # chunk-prefix list rides the checkpoint (see _dedup_batch)
     cp_obs = Observation()
     chunks = chunks.observe(
@@ -412,49 +449,25 @@ def _simhash_batch_fn(
         n_salt=cfg.band_salt_buckets,
         even_exchange=False,  # micro-batch: let AQE coalesce-to-few
     )
-    # overflow markers carry an explicit flag column so log consumers
-    # never mistake a counter row for a pair (they also keep the
-    # '_overflow' id convention for grep-ability). INTRA-batch capped
-    # buckets are counted too — the batch pipeline checkpoints them as the
-    # p7b overflow phase; the stream has no phase table, so they ride the
-    # pair log like the state-side markers below (capped, counted, never
-    # silent).
+    # INTRA-batch capped buckets are counted too — the batch pipeline
+    # checkpoints them as the p7b overflow phase; the stream has no phase
+    # table, so they ride the pair log like the state-side markers below
     intra = intra.withColumn("is_overflow", F.lit(False))
-    intra_markers = (
-        intra_ovf.groupBy("chunk_id")
-        .agg(F.sum("bucket_n").cast("int").alias("hamming"))
-        .select(
-            F.lit("_overflow").alias("conv_id_a"),
-            F.concat(F.lit("intra_chunk_"), F.col("chunk_id")).alias(
-                "conv_id_b"
-            ),
-            "hamming",
-            F.lit(True).alias("is_overflow"),
-        )
+    intra_markers = _overflow_markers(
+        intra_ovf, "chunk_id", "intra_chunk_",
+        F.sum("bucket_n").cast("int"), "hamming",
     )
     pairs = intra.unionByName(intra_markers)
     state_data = os.path.join(state_dir, "data")
     if _has_parts(state_data):
-        cps = sorted(cp_obs.get["cps"])
-        state = (
-            spark.read.parquet(state_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("cp").isin(cps))
+        state = _prior_state(
+            spark, state_data, epoch_id, "cp", cp_obs.get["cps"]
         )
         w_bucket = Window.partitionBy("chunk_id", "chunk_val")
         state = state.withColumn("bn", F.count("*").over(w_bucket))
-        hot = (
-            state.filter(F.col("bn") > cfg.max_band_bucket)
-            .groupBy("chunk_id")
-            .agg(F.count("*").cast("int").alias("hamming"))
-            .select(
-                F.lit("_overflow").alias("conv_id_a"),
-                F.concat(F.lit("chunk_"), F.col("chunk_id")).alias(
-                    "conv_id_b"
-                ),
-                "hamming",
-                F.lit(True).alias("is_overflow"),
-            )
+        hot = _overflow_markers(
+            state.filter(F.col("bn") > cfg.max_band_bucket),
+            "chunk_id", "chunk_", F.count("*").cast("int"), "hamming",
         )
         cross = (
             state.filter(F.col("bn") <= cfg.max_band_bucket)
@@ -483,21 +496,8 @@ def _simhash_batch_fn(
             .withColumn("is_overflow", F.lit(False))
         )
         pairs = pairs.unionByName(cross).unionByName(hot)
-    (
-        pairs.distinct()
-        .withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(os.path.join(pairs_dir, "data"))
-    )
-    (
-        chunks.withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "cp")
-        .parquet(state_data)
-    )
+    _write_epoch(pairs.distinct(), os.path.join(pairs_dir, "data"), epoch_id)
+    _write_epoch(chunks, state_data, epoch_id, "cp")
 
 
 def run_incremental_simhash(
@@ -516,34 +516,17 @@ def run_incremental_simhash(
     from fast_duplicate_finder_spark.config import PipelineConfig
 
     cfg = cfg or PipelineConfig()
-    _require_local_fs(work_dir)
-    state_dir = os.path.join(work_dir, "sim_state")
-    pairs_dir = os.path.join(work_dir, "near_pairs")
-    ckpt = os.path.join(work_dir, "_simhash_stream_checkpoint")
-    os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(pairs_dir, exist_ok=True)
-    stream = stream_transcripts(spark, input_path, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(
-        lambda df, eid: _simhash_batch_fn(df, eid, state_dir, pairs_dir, cfg)
-    ).option("checkpointLocation", ckpt)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_leg(
+        spark, _SIMHASH, TRANSCRIPT_SCHEMA, input_path, work_dir,
+        partial(_simhash_batch_fn, cfg=cfg),
+        available_now, max_files_per_trigger,
+    )
 
 
 def read_near_pair_log(spark: SparkSession, work_dir: str) -> DataFrame:
-    """Every near-dup pair the stream has emitted (see read_dup_log for
-    the empty-log contract). Reads with the explicit schema so epochs
-    written before ``is_overflow`` existed still load; their flag is
-    reconstructed from the marker-row convention those epochs used."""
-    _require_local_fs(work_dir)
-    path = os.path.join(work_dir, "near_pairs", "data")
-    if not _has_parts(path):
-        return empty_frame(spark, NEAR_PAIR_SCHEMA)
-    return spark.read.schema(NEAR_PAIR_SCHEMA).parquet(path).withColumn(
-        "is_overflow",
-        F.coalesce(F.col("is_overflow"), F.col("conv_id_a") == "_overflow"),
-    )
+    """Every near-dup pair the stream has emitted (see _read_log for the
+    empty-log contract)."""
+    return _read_log(spark, work_dir, _SIMHASH.out, NEAR_PAIR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -607,9 +590,7 @@ def _lsh_batch_fn(
     bp_obs = Observation()  # band-prefix list rides the checkpoint
     bands = (
         lsh_band_rows(sigs, cfg)
-        .withColumn(
-            "bp", F.pmod(F.col("band_hash"), F.lit(N_STATE_PREFIXES)).cast("int")
-        )
+        .withColumn("bp", _prefix(F.col("band_hash")))
         .observe(bp_obs, F.collect_set("bp").alias("bps"))
         .localCheckpoint(eager=True)  # self-join + state join + state write
     )
@@ -620,14 +601,8 @@ def _lsh_batch_fn(
     intra = verify_jaccard(cands, feats, cfg.jaccard_tau).withColumn(
         "is_overflow", F.lit(False)
     )
-    # marker rows carry an explicit flag (see _simhash_batch_fn)
-    markers = overflow.groupBy("band_id").agg(
-        F.count("*").cast("double").alias("jaccard")
-    ).select(
-        F.lit("_overflow").alias("conv_id_a"),
-        F.concat(F.lit("band_"), F.col("band_id")).alias("conv_id_b"),
-        "jaccard",
-        F.lit(True).alias("is_overflow"),
+    markers = _overflow_markers(
+        overflow, "band_id", "band_", F.count("*").cast("double"), "jaccard"
     )
     pairs = intra.unionByName(markers)
 
@@ -639,26 +614,14 @@ def _lsh_batch_fn(
     # wedge the stream forever. With only this epoch's (excluded) rows in
     # bands state, skipping the cross path loses nothing.
     if _has_parts(bands_data) and _has_parts(feats_data):
-        bps = sorted(bp_obs.get["bps"])
-        sbands = (
-            spark.read.parquet(bands_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("bp").isin(bps))
+        sbands = _prior_state(
+            spark, bands_data, epoch_id, "bp", bp_obs.get["bps"]
         )
         w_bucket = Window.partitionBy("band_id", "band_hash")
         sbands = sbands.withColumn("bn", F.count("*").over(w_bucket))
-        state_markers = (
-            sbands.filter(F.col("bn") > cfg.max_band_bucket)
-            .groupBy("band_id")
-            .agg(F.count("*").cast("double").alias("jaccard"))
-            .select(
-                F.lit("_overflow").alias("conv_id_a"),
-                F.concat(F.lit("state_band_"), F.col("band_id")).alias(
-                    "conv_id_b"
-                ),
-                "jaccard",
-                F.lit(True).alias("is_overflow"),
-            )
+        state_markers = _overflow_markers(
+            sbands.filter(F.col("bn") > cfg.max_band_bucket),
+            "band_id", "state_band_", F.count("*").cast("double"), "jaccard",
         )
         cross_cand = (
             sbands.filter(F.col("bn") <= cfg.max_band_bucket)
@@ -672,26 +635,16 @@ def _lsh_batch_fn(
                 ["band_id", "band_hash"],
             )
             .filter(F.col("sc") != F.col("bc"))
-            .select(
-                "sc",
-                "bc",
-                F.pmod(F.xxhash64("sc"), F.lit(N_STATE_PREFIXES))
-                .cast("int")
-                .alias("hp"),
-            )
+            .select("sc", "bc", _prefix(F.xxhash64("sc")).alias("hp"))
             .distinct()
         )
         hp_obs = Observation()  # state-conv prefixes ride the checkpoint
         cross_cand = cross_cand.observe(
             hp_obs, F.collect_set("hp").alias("hps")
         ).localCheckpoint(eager=True)  # feeds verify join (both sides)
-        hps = sorted(hp_obs.get["hps"])
-        sfeats = (
-            spark.read.parquet(feats_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("hp").isin(hps))
-            .select("conv_id", "shset")
-        )
+        sfeats = _prior_state(
+            spark, feats_data, epoch_id, "hp", hp_obs.get["hps"]
+        ).select("conv_id", "shset")
         cross_pairs = (
             cross_cand.join(
                 sfeats.select(
@@ -731,31 +684,13 @@ def _lsh_batch_fn(
         )
         pairs = pairs.unionByName(cross_pairs).unionByName(state_markers)
 
-    (
-        pairs.distinct()
-        .withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(os.path.join(pairs_dir, "data"))
-    )
-    (
-        bands.withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "bp")
-        .parquet(bands_data)
-    )
-    (
-        feats.withColumn(
-            "hp",
-            F.pmod(F.xxhash64("conv_id"), F.lit(N_STATE_PREFIXES)).cast("int"),
-        )
-        .withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "hp")
-        .parquet(feats_data)
+    _write_epoch(pairs.distinct(), os.path.join(pairs_dir, "data"), epoch_id)
+    _write_epoch(bands, bands_data, epoch_id, "bp")
+    _write_epoch(
+        feats.withColumn("hp", _prefix(F.xxhash64("conv_id"))),
+        feats_data,
+        epoch_id,
+        "hp",
     )
 
 
@@ -772,33 +707,17 @@ def run_incremental_lsh(
     from fast_duplicate_finder_spark.config import PipelineConfig
 
     cfg = cfg or PipelineConfig()
-    _require_local_fs(work_dir)
-    state_dir = os.path.join(work_dir, "lsh_state")
-    pairs_dir = os.path.join(work_dir, "lsh_pairs")
-    ckpt = os.path.join(work_dir, "_lsh_stream_checkpoint")
-    os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(pairs_dir, exist_ok=True)
-    stream = stream_transcripts(spark, input_path, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(
-        lambda df, eid: _lsh_batch_fn(df, eid, state_dir, pairs_dir, cfg)
-    ).option("checkpointLocation", ckpt)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_leg(
+        spark, _LSH, TRANSCRIPT_SCHEMA, input_path, work_dir,
+        partial(_lsh_batch_fn, cfg=cfg),
+        available_now, max_files_per_trigger,
+    )
 
 
 def read_lsh_pair_log(spark: SparkSession, work_dir: str) -> DataFrame:
     """Every MinHash/LSH near-dup pair the stream has emitted (see
-    read_dup_log for the empty-log contract; see read_near_pair_log for
-    the pre-``is_overflow`` epoch migration-on-read)."""
-    _require_local_fs(work_dir)
-    path = os.path.join(work_dir, "lsh_pairs", "data")
-    if not _has_parts(path):
-        return empty_frame(spark, LSH_PAIR_SCHEMA)
-    return spark.read.schema(LSH_PAIR_SCHEMA).parquet(path).withColumn(
-        "is_overflow",
-        F.coalesce(F.col("is_overflow"), F.col("conv_id_a") == "_overflow"),
-    )
+    _read_log for the empty-log contract)."""
+    return _read_log(spark, work_dir, _LSH.out, LSH_PAIR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -843,24 +762,16 @@ def _resolve_labels(
     for _ in range(prune_rounds):
         obs = Observation()
         cur = (
-            labels.withColumn(
-                "mp",
-                F.pmod(F.xxhash64("label"), F.lit(N_STATE_PREFIXES)).cast(
-                    "int"
-                ),
-            )
+            labels.withColumn("mp", _prefix(F.xxhash64("label")))
             .observe(obs, F.collect_set("mp").alias("mps"))
             .localCheckpoint(eager=True)
         )
-        prefixes = sorted(obs.get["mps"] or [])
+        prefixes = obs.get["mps"]
         if not prefixes:
             return cur.drop("mp")
-        step = (
-            spark.read.parquet(merges_data)
-            .filter(F.col("epoch_id") != F.lit(epoch_id))
-            .filter(F.col("mp").isin(prefixes))
-            .select(F.col("label_from").alias("label"), "label_to")
-        )
+        step = _prior_state(
+            spark, merges_data, epoch_id, "mp", prefixes
+        ).select(F.col("label_from").alias("label"), "label_to")
         hop = Observation()
         remapped = (
             cur.drop("mp")
@@ -927,11 +838,9 @@ def _clusters_batch(
     )
 
     spark = batch.sparkSession
-    pairs = batch
-    if "is_overflow" in pairs.columns:
-        pairs = pairs.filter(~F.coalesce(F.col("is_overflow"), F.lit(False)))
     pairs = (
-        pairs.select("conv_id_a", "conv_id_b")
+        batch.filter(~F.coalesce(F.col("is_overflow"), F.lit(False)))
+        .select("conv_id_a", "conv_id_b")
         # marker convention, BOTH sides: our own legs put '_overflow' in
         # conv_id_a, but a foreign pair feed (or a flag-null row) may order
         # the marker second — a '_'-prefixed id must never be clustered as
@@ -946,12 +855,7 @@ def _clusters_batch(
         pairs.select(F.col("conv_id_a").alias("conv_id"))
         .union(pairs.select(F.col("conv_id_b")))
         .distinct()
-        .withColumn(
-            "cp",
-            F.pmod(F.xxhash64("conv_id"), F.lit(N_STATE_PREFIXES)).cast(
-                "int"
-            ),
-        )
+        .withColumn("cp", _prefix(F.xxhash64("conv_id")))
         .observe(
             obs,
             F.collect_set("cp").alias("cps"),
@@ -965,11 +869,8 @@ def _clusters_batch(
     merges_data = os.path.join(merges_dir, "data")
     known = None
     if _has_parts(base_data):
-        prefixes = sorted(obs.get["cps"])
         known = (
-            spark.read.parquet(base_data)
-            .filter(F.col("epoch_id") != F.lit(epoch_id))
-            .filter(F.col("cp").isin(prefixes))
+            _prior_state(spark, base_data, epoch_id, "cp", obs.get["cps"])
             .select("conv_id", "label")
             .join(ids.select("conv_id"), "conv_id")
         )
@@ -993,11 +894,7 @@ def _clusters_batch(
     base_new = new_ids.join(comp, "conv_id").select(
         "conv_id", F.col("component").alias("label"), "cp"
     )
-    base_new.withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "epoch_id", "cp"
-    ).parquet(base_data)
+    _write_epoch(base_new, base_data, epoch_id, "cp")
     if known is not None:
         merges_new = (
             known.select(F.col("label").alias("label_from"))
@@ -1010,18 +907,9 @@ def _clusters_batch(
                 "label_from",
             )
             .filter(F.col("label_from") != F.col("label_to"))
-            .withColumn(
-                "mp",
-                F.pmod(F.xxhash64("label_from"), F.lit(N_STATE_PREFIXES)).cast(
-                    "int"
-                ),
-            )
+            .withColumn("mp", _prefix(F.xxhash64("label_from")))
         )
-        merges_new.withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "epoch_id", "mp"
-        ).parquet(merges_data)
+        _write_epoch(merges_new, merges_data, epoch_id, "mp")
 
 
 def run_incremental_clusters(
@@ -1038,22 +926,10 @@ def run_incremental_clusters(
     ids are skipped). ``input_path`` follows the stream_transcripts listing
     rules (flat files or a glob). Returns the StreamingQuery; read results
     with read_cluster_labels."""
-    _require_local_fs(work_dir)
-    base_dir = os.path.join(work_dir, "base")
-    merges_dir = os.path.join(work_dir, "merges")
-    ckpt = os.path.join(work_dir, "_stream_checkpoint")
-    os.makedirs(base_dir, exist_ok=True)
-    os.makedirs(merges_dir, exist_ok=True)
-    reader = spark.readStream.schema(PAIR_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-    writer = stream.writeStream.foreachBatch(
-        lambda df, eid: _clusters_batch(df, eid, base_dir, merges_dir)
-    ).option("checkpointLocation", ckpt)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_leg(
+        spark, _CLUSTERS, PAIR_STREAM_SCHEMA, input_path, work_dir,
+        _clusters_batch, available_now, max_files_per_trigger,
+    )
 
 
 def _compressed_merge_map(
@@ -1109,13 +985,11 @@ def read_cluster_labels(spark: SparkSession, work_dir: str) -> DataFrame:
     output over the union of all pair batches streamed so far. (Read
     between triggers, like the other read_* utilities: a half-written
     epoch is excluded by the NEXT batch's reads, not by this one.)"""
-    _require_local_fs(work_dir)
-    base_data = os.path.join(work_dir, "base", "data")
-    if not _has_parts(base_data):
-        return empty_frame(spark, CLUSTER_LABEL_SCHEMA)
-    labels = spark.read.parquet(base_data).select("conv_id", "label")
+    labels = _read_log(
+        spark, work_dir, _CLUSTERS.state, CLUSTER_LABEL_SCHEMA
+    ).select("conv_id", "label")
     m = _compressed_merge_map(
-        spark, os.path.join(work_dir, "merges", "data")
+        spark, os.path.join(work_dir, _CLUSTERS.out, "data")
     )
     if m is None:
         return labels
@@ -1142,12 +1016,12 @@ def compact_cluster_state(spark: SparkSession, work_dir: str) -> None:
     MUST run against a QUIESCED stream whose last epoch committed cleanly:
     a pending at-least-once replay of epoch E excludes only epoch E's own
     partitions, and would read its crashed half-write back as prior state
-    once folded into ``COMPACTED_EPOCH``. (A committed epoch's replay
-    never happens; re-running a committed epoch by hand stays a no-op —
-    every conv resolves as known with its current root, so nothing is
-    rewritten.)
+    once folded into ``COMPACTED_EPOCH``; _require_quiesced refuses that
+    state before any rewrite. (A committed epoch's replay never happens;
+    re-running a committed epoch by hand stays a no-op — every conv
+    resolves as known with its current root, so nothing is rewritten.)
 
-    Crash-safe in the _migrate_legacy_state mold — the rewrite lands in
+    Crash-safe through _crash_safe_swap — the rewrite lands in
     ``.compact`` (completion marked by parquet's _SUCCESS), the live table
     is renamed ASIDE, the rewrite renamed INTO PLACE, and cleanup happens
     last; every window leaves the old state intact or a completed rewrite
@@ -1157,16 +1031,13 @@ def compact_cluster_state(spark: SparkSession, work_dir: str) -> None:
     labels in the compacted base, so the closure join matches nothing."""
     import shutil
 
-    _require_local_fs(work_dir)
-    base_data = os.path.join(work_dir, "base", "data")
-    merges_data = os.path.join(work_dir, "merges", "data")
+    _require_quiesced(work_dir, _CLUSTERS)
+    base_data = os.path.join(work_dir, _CLUSTERS.state, "data")
+    merges_data = os.path.join(work_dir, _CLUSTERS.out, "data")
 
     def write_rewrite(tmp: str) -> bool:
         resolved = read_cluster_labels(spark, work_dir).withColumn(
-            "cp",
-            F.pmod(F.xxhash64("conv_id"), F.lit(N_STATE_PREFIXES)).cast(
-                "int"
-            ),
+            "cp", _prefix(F.xxhash64("conv_id"))
         )
         resolved.withColumn("epoch_id", F.lit(COMPACTED_EPOCH)).write.mode(
             "overwrite"
@@ -1198,7 +1069,7 @@ def _fold_epoch_partitions(
     always read back as prior state. The parquet analogue of Iceberg's
     rewrite_data_files maintenance, same as compact_cluster_state.
 
-    Crash-safe in the _migrate_legacy_state mold: the rewrite lands in
+    Crash-safe through _crash_safe_swap: the rewrite lands in
     ``.compact`` (completion marked by parquet's _SUCCESS), the live table
     is renamed ASIDE, the rewrite renamed INTO PLACE, cleanup last. Every
     crash window leaves either the old table in place or a completed
@@ -1274,21 +1145,53 @@ def _crash_safe_swap(
     shutil.rmtree(old)
 
 
+def _require_quiesced(work_dir: str, layout: _Layout) -> None:
+    """Enforce the compactors' contract before any rewrite: ``work_dir``
+    is local (see _require_local_fs) and the leg's stream checkpoint holds
+    no pending replay — its highest ``offsets/N`` has a matching
+    ``commits/N``. An uncommitted epoch is replayed at least once on
+    restart, and folding its half-write into ``COMPACTED_EPOCH`` would
+    hand the replay its own rows as prior state. A missing checkpoint
+    passes: state driven batch by batch (``_*_batch``) has none."""
+    _require_local_fs(work_dir)
+    ckpt = os.path.join(work_dir, layout.checkpoint)
+
+    def batch_ids(sub: str) -> set[int]:
+        d = os.path.join(ckpt, sub)
+        if not os.path.isdir(d):
+            return set()
+        return {int(n) for n in os.listdir(d) if n.isdigit()}
+
+    offsets = batch_ids("offsets")
+    if offsets and max(offsets) not in batch_ids("commits"):
+        raise RuntimeError(
+            f"stream checkpoint {ckpt} has uncommitted batch {max(offsets)}: "
+            "compaction requires a quiesced stream whose last epoch "
+            "committed; restart the stream to replay it, then compact"
+        )
+
+
+def _compact_leg(spark: SparkSession, work_dir: str, layout: _Layout) -> None:
+    _require_quiesced(work_dir, layout)
+    for rel, prefix_col in layout.folds:
+        _fold_epoch_partitions(
+            spark, os.path.join(work_dir, layout.state, rel), [prefix_col]
+        )
+
+
 def compact_dedup_state(spark: SparkSession, work_dir: str) -> None:
     """Fold the exact leg's seen-hash state (``state/data``, partitioned by
     (epoch_id, hp)) into the reserved ``COMPACTED_EPOCH``.
 
     MUST run against a QUIESCED stream whose last epoch committed cleanly
-    (same contract as compact_cluster_state): a pending at-least-once
-    replay of epoch E excludes only epoch E's own partitions, and would
-    read its crashed half-write back as prior state once folded — for this
-    leg that means the replayed convs would join against their own hashes
-    and be logged as duplicates of themselves. Requires a local-filesystem
-    ``work_dir`` (rename dance; see _require_local_fs)."""
-    _require_local_fs(work_dir)
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "state", "data"), ["hp"]
-    )
+    (same contract as compact_cluster_state, enforced by
+    _require_quiesced): a pending at-least-once replay of epoch E excludes
+    only epoch E's own partitions, and would read its crashed half-write
+    back as prior state once folded — for this leg that means the
+    replayed convs would join against their own hashes and be logged as
+    duplicates of themselves. Requires a local-filesystem ``work_dir``
+    (rename dance; see _require_local_fs)."""
+    _compact_leg(spark, work_dir, _DEDUP)
 
 
 def compact_simhash_state(spark: SparkSession, work_dir: str) -> None:
@@ -1299,10 +1202,7 @@ def compact_simhash_state(spark: SparkSession, work_dir: str) -> None:
     its own chunks as prior state (self-pairs are filtered by the
     ``sc != bc`` guard, but the epoch's pair set would stop being
     byte-identical under replay)."""
-    _require_local_fs(work_dir)
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "sim_state", "data"), ["cp"]
-    )
+    _compact_leg(spark, work_dir, _SIMHASH)
 
 
 def compact_lsh_state(spark: SparkSession, work_dir: str) -> None:
@@ -1317,10 +1217,4 @@ def compact_lsh_state(spark: SparkSession, work_dir: str) -> None:
     the band-state join and the named-slice feats read see exactly the
     rows they saw before; the next call finishes the feats fold (and
     no-ops on bands)."""
-    _require_local_fs(work_dir)
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "lsh_state", "bands", "data"), ["bp"]
-    )
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "lsh_state", "feats", "data"), ["hp"]
-    )
+    _compact_leg(spark, work_dir, _LSH)

@@ -120,7 +120,8 @@ def main() -> int:
                     if p.get("numInputRows", 0) > 0]
         # non-marker rows only: overflow counter rows must not inflate
         # log_rows (this value is also the clusters leg's pairs_per_sec
-        # numerator below)
+        # numerator below); the exact leg's dup log has no marker rows and
+        # no is_overflow column
         log = reader(spark, wd)
         n_rows = (log.filter("NOT is_overflow").count()
                   if "is_overflow" in log.columns else log.count())

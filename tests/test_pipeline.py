@@ -38,12 +38,21 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert _collect_sorted(rep2.near_clusters) == clusters1
     assert _collect_sorted(rep2.exact_clusters) == exact1
 
-    # kill-after-phase-k: wipe the pair phase checkpoint onward, recompute
-    for phase in ["p7_pairs", "p8_clusters", "report_summary"]:
+    # kill-after-phase-k: wipe the pair phase checkpoint onward, recompute;
+    # a leg whose overflow side table is gone recomputes as a whole
+    for phase in ["p7b_simhash_overflow", "p7_pairs", "p8_clusters",
+                  "report_summary"]:
         shutil.rmtree(os.path.join(ckpt, phase), ignore_errors=True)
     rep3 = run_pipeline(spark, df, CFG, ckpt, resume=True)
     assert _collect_sorted(rep3.near_clusters) == clusters1
     assert rep3.summary == rep1.summary
+    by_phase = {m["phase"]: m for m in rep3.metrics}
+    assert not by_phase["p7b_simhash_pairs"].get("resumed")
+    assert "seconds" in by_phase["p7b_simhash_pairs"]
+    assert by_phase["p7a_minhash_pairs"].get("resumed")
+    assert os.path.exists(
+        os.path.join(ckpt, "p7b_simhash_overflow", "_MANIFEST.json")
+    )
 
     # manifests carry lineage + per-partition counters
     with open(os.path.join(ckpt, "p3_exact", "_MANIFEST.json")) as f:

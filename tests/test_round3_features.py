@@ -495,10 +495,12 @@ def test_connected_components_long_chain_and_nonconvergence():
 def test_read_dup_log_empty_and_missing(spark, tmp_path):
     """A duplicate-free stream writes only _SUCCESS markers; before the
     first batch nothing exists — both must read as an EMPTY log, not
-    raise schema-inference errors."""
+    raise schema-inference errors — with the same schema a non-empty log
+    reads with (``epoch_id`` bigint, not the partition-inferred int)."""
     import os as _os
 
     from fast_duplicate_finder_spark.streaming.incremental import (
+        _dedup_batch,
         read_dup_log,
         run_incremental_dedup,
     )
@@ -518,6 +520,21 @@ def test_read_dup_log_empty_and_missing(spark, tmp_path):
     log = read_dup_log(spark, wd)
     assert log.count() == 0
     assert "first_conv_id" in log.columns
+
+    dup_wd = tmp_path / "dup_wd"
+    _dedup_batch(
+        spark.createDataFrame(
+            [(f"c{i}", 0, "user", "same text", "", None) for i in range(2)],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp",
+        ),
+        0,
+        str(dup_wd / "state"),
+        str(dup_wd / "dups"),
+    )
+    dups = read_dup_log(spark, str(dup_wd))
+    assert dups.count() == 1
+    assert dups.schema == log.schema
 
 
 def test_simhash_pairs_invariant_under_salting(spark):

@@ -299,6 +299,8 @@ def test_streaming_work_dir_must_be_local(spark, tmp_path):
 
     for fn in (
         lambda: inc.run_incremental_dedup(spark, str(tmp_path), "hdfs://nn/x"),
+        lambda: inc.run_incremental_simhash(spark, str(tmp_path), "s3a://b/x"),
+        lambda: inc.run_incremental_lsh(spark, str(tmp_path), "hdfs://nn/x"),
         lambda: inc.run_incremental_clusters(
             spark, str(tmp_path), "s3a://bucket/x"
         ),
@@ -308,3 +310,59 @@ def test_streaming_work_dir_must_be_local(spark, tmp_path):
     ):
         with pytest.raises(ValueError, match="local filesystem"):
             fn()
+
+
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def test_compaction_refuses_unquiesced_stream(spark, tmp_path):
+    """Compaction must run on a QUIESCED stream: a checkpoint whose highest
+    offsets/N has no commits/N holds a pending at-least-once replay, and
+    folding that epoch's half-write would hand the replay its own rows as
+    prior state. Each compactor refuses before touching state; once the
+    commit is back, compaction proceeds."""
+    import shutil
+
+    from fast_duplicate_finder_spark.streaming import incremental as inc
+
+    files = _write_epoch_files(spark, tmp_path)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    os.rename(files[0], in_dir / os.path.basename(files[0]))
+    work = str(tmp_path / "work")
+    q = inc.run_incremental_dedup(spark, str(in_dir), work)
+    assert q.awaitTermination(300)
+
+    commits = os.path.join(work, "_stream_checkpoint", "commits")
+    last = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
+    shutil.move(os.path.join(commits, last), str(tmp_path / "commit"))
+    state = os.path.join(work, "state")
+    before = _tree_bytes(state)
+    with pytest.raises(RuntimeError, match="uncommitted batch"):
+        inc.compact_dedup_state(spark, work)
+    assert _tree_bytes(state) == before
+
+    shutil.move(str(tmp_path / "commit"), os.path.join(commits, last))
+    inc.compact_dedup_state(spark, work)
+    assert _visible_epochs(os.path.join(state, "data")) == {
+        f"epoch_id={inc.COMPACTED_EPOCH}"
+    }
+
+    # every other leg reads its own checkpoint dir through the same check
+    for compactor, ckpt in (
+        (inc.compact_simhash_state, "_simhash_stream_checkpoint"),
+        (inc.compact_lsh_state, "_lsh_stream_checkpoint"),
+        (inc.compact_cluster_state, "_stream_checkpoint"),
+    ):
+        wd = tmp_path / f"pending_{compactor.__name__}"
+        (wd / ckpt / "offsets").mkdir(parents=True)
+        (wd / ckpt / "offsets" / "0").write_text("v1\n")
+        with pytest.raises(RuntimeError, match="uncommitted batch"):
+            compactor(spark, str(wd))

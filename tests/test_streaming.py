@@ -78,6 +78,8 @@ def test_incremental_dedup_matches_batch(spark, corpus_dir, tmp_path):
     expected = _batch_expected_dups(spark, corpus_dir)
     assert expected, "corpus must contain planted duplicates"
     assert got == expected
+    # a renamed checkpoint dir would silently reprocess the whole stream
+    assert sorted(os.listdir(work)) == ["_stream_checkpoint", "dups", "state"]
 
 
 def test_incremental_dedup_resume_is_idempotent(spark, corpus_dir, tmp_path):
@@ -188,52 +190,6 @@ def test_state_partitioned_by_prefix_and_replay_idempotent(spark, tmp_path):
     assert hps <= set(range(N_STATE_PREFIXES))
 
 
-def test_legacy_unpartitioned_state_is_migrated(spark, tmp_path):
-    """A state table written by the pre-(epoch_id, hp) layout (plain
-    unpartitioned append, no hp column) must be upgraded in place at
-    stream start — not wedge every micro-batch with UNRESOLVED_COLUMN,
-    and not lose the seen-hash history."""
-    from fast_duplicate_finder_spark.streaming.incremental import (
-        LEGACY_EPOCH,
-        _dedup_batch,
-        _migrate_legacy_state,
-    )
-    from fast_duplicate_finder_spark.sources.transcripts import (
-        assemble_conversations,
-    )
-
-    t = generate_transcripts(spark, n_convs=30, seed=5)
-    docs = assemble_conversations(t)
-    legacy = docs.select(
-        "conv_id", F.xxhash64("doc").alias("fhash"), "size"
-    )
-    state_data = str(tmp_path / "state" / "data")
-    legacy.write.parquet(state_data)  # old layout: no hp, no epoch_id
-
-    _migrate_legacy_state(spark, state_data)
-    migrated = spark.read.parquet(state_data)
-    assert "hp" in migrated.columns and "epoch_id" in migrated.columns
-    assert migrated.filter(F.col("epoch_id") != LEGACY_EPOCH).count() == 0
-    assert migrated.count() == legacy.count()
-    assert any(
-        d.startswith("epoch_id=") for d in os.listdir(state_data)
-    )
-
-    # a new batch replaying one legacy conversation sees it as a DUP
-    replay = t.filter(
-        F.col("conv_id") == t.select("conv_id").first()["conv_id"]
-    )
-    _dedup_batch(
-        replay, 7, str(tmp_path / "state"), str(tmp_path / "dups")
-    )
-    dups = spark.read.parquet(str(tmp_path / "dups" / "data"))
-    assert dups.count() == 1  # matched against migrated legacy state
-
-    # idempotent: migrating again is a no-op
-    _migrate_legacy_state(spark, state_data)
-    assert spark.read.parquet(state_data).count() == legacy.count()
-
-
 def _one_turn_rows(docs: dict[str, str]):
     import datetime
 
@@ -321,6 +277,9 @@ def test_incremental_simhash_matches_batch(spark, tmp_path):
     assert ("s1", "s2") in got      # intra-batch (salted generator)
     assert not any("q1" in p for p in got)
     assert got == expected
+    assert sorted(os.listdir(tmp_path / "work")) == [
+        "_simhash_stream_checkpoint", "near_pairs", "sim_state"
+    ]
 
 
 def test_incremental_simhash_replay_idempotent_and_partitioned(
@@ -442,6 +401,9 @@ def test_incremental_lsh_matches_batch(spark, tmp_path):
     assert ("c1", "c2") in keys       # intra-batch
     assert not any("q1" in p for p in keys)
     assert got == expected            # exact jaccard values agree too
+    assert sorted(os.listdir(tmp_path / "work")) == [
+        "_lsh_stream_checkpoint", "lsh_pairs", "lsh_state"
+    ]
 
 
 def test_incremental_lsh_replay_idempotent_and_partitioned(spark, tmp_path):
@@ -500,8 +462,8 @@ def test_incremental_lsh_replay_idempotent_and_partitioned(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round 4: forced mid-batch crashes, atomic migration, zero-row state,
-# explicit overflow flag
+# Round 4: forced mid-batch crashes, zero-row state, explicit overflow
+# flag
 # ---------------------------------------------------------------------------
 
 
@@ -621,52 +583,6 @@ def test_lsh_crash_windows_replay_identical(
     real = pairs.filter(~F.col("is_overflow"))
     assert real.count() >= 1  # the cross-epoch near-dup pair
     assert not any("_overflow" in r["conv_id_a"] for r in real.collect())
-
-
-def test_migration_crash_between_renames_recovers(spark, tmp_path):
-    """ADVICE round-3 (medium): the legacy-state migration must not lose
-    the seen-hash state if killed between its renames. Simulate the exact
-    crash window (state_data renamed aside, completed rewrite not yet in
-    place) and assert the next call finishes the swap."""
-    import shutil
-
-    from fast_duplicate_finder_spark.sources.transcripts import (
-        assemble_conversations,
-    )
-    from fast_duplicate_finder_spark.streaming.incremental import (
-        LEGACY_EPOCH,
-        _migrate_legacy_state,
-    )
-
-    t = generate_transcripts(spark, n_convs=20, seed=3)
-    legacy = assemble_conversations(t).select(
-        "conv_id", F.xxhash64("doc").alias("fhash"), "size"
-    )
-    state_data = str(tmp_path / "state" / "data")
-    legacy.write.parquet(state_data)
-    n_legacy = legacy.count()
-
-    # run the migration once to produce the completed rewrite, then rewind
-    # the filesystem to the mid-swap crash window: state_data absent,
-    # '.migrate' complete, '.old' holding the original
-    _migrate_legacy_state(spark, state_data)
-    shutil.copytree(state_data, state_data + ".migrate")
-    os.rename(state_data, state_data + ".old")
-
-    _migrate_legacy_state(spark, state_data)  # restart after the "crash"
-    recovered = spark.read.parquet(state_data)
-    assert recovered.count() == n_legacy
-    assert recovered.filter(F.col("epoch_id") != LEGACY_EPOCH).count() == 0
-    assert not os.path.exists(state_data + ".migrate")
-    assert not os.path.exists(state_data + ".old")
-
-    # a stale INCOMPLETE rewrite next to intact legacy state is rebuilt
-    state2 = str(tmp_path / "s2" / "data")
-    legacy.write.parquet(state2)
-    os.makedirs(state2 + ".migrate")  # no _SUCCESS: aborted write
-    _migrate_legacy_state(spark, state2)
-    assert spark.read.parquet(state2).count() == n_legacy
-    assert not os.path.exists(state2 + ".migrate")
 
 
 def test_zero_row_state_write_does_not_wedge_stream(spark, tmp_path):
@@ -829,41 +745,6 @@ def test_lsh_first_epoch_crash_does_not_wedge_stream(
     assert rows(os.path.join(pd_, "data")) == rows(os.path.join(rp, "data"))
 
 
-def test_pair_log_readers_migrate_pre_flag_epochs(spark, tmp_path):
-    """Epochs written before the ``is_overflow`` column existed must still
-    load: the readers read with the explicit schema and reconstruct the
-    flag from the old marker-row convention (conv_id_a = '_overflow')."""
-    from fast_duplicate_finder_spark.streaming.incremental import (
-        read_lsh_pair_log,
-        read_near_pair_log,
-    )
-
-    old_near = spark.createDataFrame(
-        [("a", "b", 3), ("_overflow", "chunk_1", 7)],
-        "conv_id_a string, conv_id_b string, hamming int",
-    ).withColumn("epoch_id", F.lit(0))
-    new_near = spark.createDataFrame(
-        [("c", "d", 2, False)],
-        "conv_id_a string, conv_id_b string, hamming int, is_overflow boolean",
-    ).withColumn("epoch_id", F.lit(1))
-    near_path = str(tmp_path / "near" / "near_pairs" / "data")
-    old_near.write.partitionBy("epoch_id").parquet(near_path)
-    new_near.write.mode("append").partitionBy("epoch_id").parquet(near_path)
-    got = read_near_pair_log(spark, str(tmp_path / "near"))
-    flags = {(r["conv_id_a"], r["is_overflow"]) for r in got.collect()}
-    assert flags == {("a", False), ("_overflow", True), ("c", False)}
-
-    old_lsh = spark.createDataFrame(
-        [("a", "b", 0.9), ("_overflow", "band_2", 11.0)],
-        "conv_id_a string, conv_id_b string, jaccard double",
-    ).withColumn("epoch_id", F.lit(0))
-    lsh_path = str(tmp_path / "lsh" / "lsh_pairs" / "data")
-    old_lsh.write.partitionBy("epoch_id").parquet(lsh_path)
-    got = read_lsh_pair_log(spark, str(tmp_path / "lsh"))
-    flags = {(r["conv_id_a"], r["is_overflow"]) for r in got.collect()}
-    assert flags == {("a", False), ("_overflow", True)}
-
-
 # --- incremental clustering (pairs stream -> labels) -------------------------
 
 _PAIR_ROWS_SCHEMA = "conv_id_a string, conv_id_b string, is_overflow boolean"
@@ -933,6 +814,7 @@ def test_incremental_clusters_match_batch_cc(spark, tmp_path):
     }
     assert got == want
     assert {lbl for _, lbl in got} == {"a"}
+    assert sorted(os.listdir(wd)) == ["_stream_checkpoint", "base", "merges"]
     # merge log holds exactly the dethroned roots, nothing redundant
     merges = {
         (r["label_from"], r["label_to"])
